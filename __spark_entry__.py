@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from extractor.boilerplate import strip_boilerplate_batch
+from extractor.fanout import fan_out_scan
 from extractor.layout import parse_layout_batch, synth_layout_doc
 from extractor.ops import (
     convops,
@@ -41,24 +42,6 @@ from extractor.pipeline import (
     stitch_conversations,
 )
 from extractor.transcripts import transcripts_df
-
-
-def _fan_out_if_starved(spark, df, scan_df, cap: int = 16):
-    """Fan out a CPU-bound Python-kernel stage when the scan under-partitions.
-
-    Text parquet compresses ~10x, so maxPartitionBytes-sized splits starve a
-    CPU-heavy kernel (at small SF the corpus is ONE split -> a
-    single-threaded mapInPandas stage).  The probe is ``inputFiles()`` on
-    the raw scan (~1ms, driver-side listing only — ``rdd.getNumPartitions``
-    costs >1s of plan conversion); at production scale the table has
-    thousands of files, the guard never fires, and no shuffle is added.
-    *cap*=16: measured per-task Python-worker overhead makes 8-16 the flat
-    optimum for a ~1s kernel; full-core fan-out regresses.
-    """
-    target = min(cap, spark.sparkContext.defaultParallelism)
-    if len(scan_df.inputFiles()) < target:
-        return df.repartition(target)
-    return df
 
 
 def _boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,7 +65,8 @@ def _boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("html"),
     )
-    wrapped = _fan_out_if_starved(spark, wrapped, docs)
+    # cap=16: per-task Python-worker start makes 8-16 the flat optimum
+    wrapped = fan_out_scan(spark, wrapped, docs, cap=16)
 
     schema = T.StructType(
         [
@@ -158,7 +142,8 @@ def _extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("turn_idx"),
         F.col("text"),
     )
-    turns = _fan_out_if_starved(spark, turns, docs)
+    # cap=16: per-task Python-worker start makes 8-16 the flat optimum
+    turns = fan_out_scan(spark, turns, docs, cap=16)
     out = extract_transcripts(turns, sort_output=False)
     return out.select(
         "conv_id", "turn_idx", "extracted_text", "tables_count",
@@ -490,7 +475,8 @@ def _pdf_lzw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # encode+decode twice per doc = the heaviest Python kernel in the
     # contract; spread the starved single-split scan (guide §2.2)
-    docs = _fan_out_if_starved(spark, docs, docs)
+    # cap=16: per-task Python-worker start makes 8-16 the flat optimum
+    docs = fan_out_scan(spark, docs, docs, cap=16)
 
     def kernel(iterator):
         for pdf in iterator:
@@ -2086,7 +2072,7 @@ _LAST_GREEN_R2 = [
 def _dd_md5_bucket(salt: str, mod: int, key: str = "doc_id") -> str:
     """DuckDB expression for the engine's shared keyed-uniform primitive:
     first 8 md5 hex digits of ``salt || key`` parsed as an integer, mod N —
-    bit-for-bit the Spark side's conv(substring(md5(..),1,8),16,10) % N."""
+    bit-for-bit the Spark twin ``extractor.ops.sampling.keyed_hash`` % N."""
     return (
         "CAST(list_sum(list_transform(range(8), i -> "
         "CAST(strpos('0123456789abcdef', "

@@ -21,20 +21,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = (
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q_regional_revenue",
-    "token_stats",
-    "quality_score",
-    "o3_sessionize",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "similarity_cosine_topk",
-    "extract_documents",
-    "boilerplate_strip",
-    "corpus_curation",
-)
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:

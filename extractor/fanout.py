@@ -36,9 +36,7 @@ from pyspark.sql import functions as F
 # Cap on the bytes a fan-out shuffle may move (compressed, on-disk).
 # Tables needing the fix are maxPartitionBytes-bounded single splits by
 # construction; 1 GiB of headroom covers multi-file-but-starved layouts.
-FAN_OUT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(1 << 30))
-)
+FAN_OUT_MAX_BYTES = 1 << 30
 
 
 def fan_out_scan(

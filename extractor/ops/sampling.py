@@ -7,6 +7,9 @@ Every op keys its randomness on ``md5(salt || doc_id)`` rather than
 stable under re-partitioning, re-runs, retries, and corpus growth (adding
 documents never flips the decision for existing ones).  md5 is also the one
 hash both engines share, so each op has a bit-exact DuckDB oracle.
+:func:`keyed_hash` defined here is the engine-wide Spark form of that
+keyed bucket (every op module uses it); its DuckDB twin is
+``__spark_entry__._dd_md5_bucket``.
 
 Scale posture (100 TB): the per-doc decisions are map-only (hash + integer
 compare, codegen'd, no shuffle); ``corpus_mix_sample`` adds one tiny
@@ -17,7 +20,7 @@ so pick n_shards ≈ a few × executor count at scale (16 here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 # Per-language sampling rates in basis points (integer — no float compare).
 STRATA_RATES_BP = {"en": 10000, "de": 5000, "fr": 5000, "es": 2500, "zh": 2500}
@@ -33,20 +36,16 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _hash_bucket(salt: str, mod: int):
-    """First 8 md5 hex digits of ``salt || doc_id`` as an integer in
-    [0, mod) — the shared keyed-uniform primitive (same construction as
-    dedup.train_split_assign, which DuckDB reproduces bit-for-bit)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mod
-    )
+def keyed_hash(salt: str, *keys: str | Column) -> Column:
+    """First 8 md5 hex digits of ``salt || key...`` read as a non-negative
+    ``long`` — the engine's one keyed-uniform primitive.  Each key is a
+    column name or a ``Column``, cast to string; pass separators as
+    ``F.lit`` parts.  Callers apply their own modulus.  A NULL key gives
+    NULL.  DuckDB twin: ``__spark_entry__._dd_md5_bucket``."""
+    parts = [(F.col(k) if isinstance(k, str) else k).cast("string") for k in keys]
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), *parts)), 1, 8), 16, 10
+    ).cast("long")
 
 
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +58,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(DEFAULT_RATE_BP)
     for lang, bp in STRATA_RATES_BP.items():
         rate = F.when(F.col("lang") == lang, bp).otherwise(rate)
-    bucket = _hash_bucket("strat:", 10000)
+    bucket = keyed_hash("strat:", "doc_id") % 10000
     return docs.select(
         "doc_id",
         "lang",
@@ -111,7 +110,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rate_ppm"),
         )
     )
-    bucket = _hash_bucket("mix:", 1000000)
+    bucket = keyed_hash("mix:", "doc_id") % 1000000
     return (
         with_tok.withColumn("mix_bucket", bucket)
         .join(F.broadcast(rates), "lang")
@@ -131,7 +130,7 @@ def training_order(spark: SparkSession, sf_dir: str, n_shards: int = 16) -> Data
     executor count at real scale."""
     docs = _docs(spark, sf_dir)
     okey = F.md5(F.concat(F.lit("order:"), F.col("doc_id").cast("string")))
-    shard = _hash_bucket("shard:", n_shards)
+    shard = keyed_hash("shard:", "doc_id") % n_shards
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return (
         docs.select(
@@ -346,7 +345,7 @@ def mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.expr("eppm DIV 1000000").alias("full"),
             (F.col("eppm") % 1000000).alias("frac"),
-            _hash_bucket("epoch:", 1000000).alias("draw"),
+            (keyed_hash("epoch:", "doc_id") % 1000000).alias("draw"),
         )
     )
     return (
@@ -392,25 +391,7 @@ def epoch_training_order(spark: SparkSession, sf_dir: str,
             F.col("doc_id").cast("string"),
         )
     )
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("eshard:"),
-                        F.col("epoch").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % n_shards
-    )
+    shard = keyed_hash("eshard:", "epoch", F.lit(":"), "doc_id") % n_shards
     w = Window.partitionBy("epoch", "shard").orderBy("order_key", "doc_id")
     return (
         epochs.select(

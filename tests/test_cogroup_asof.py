@@ -71,3 +71,11 @@ def test_bucketed_asof_semantics_and_invariance(spark, events_dir, buckets):
     for r in rows:
         if r["view_us"] is not None:
             assert r["gap_us"] == r["click_us"] - r["view_us"]
+
+
+@pytest.mark.parametrize("buckets", [0, -1])
+def test_bucketed_asof_rejects_nonpositive_buckets(spark, events_dir, buckets):
+    # pmod(h, 0) is NULL in Spark: a zero bucket count would silently put
+    # every user in one cogroup instead of failing
+    with pytest.raises(ValueError, match="buckets"):
+        cogroup_merge_asof(spark, events_dir, buckets=buckets)

@@ -30,7 +30,7 @@ def test_stratified_sample_stability_under_growth(spark):
     rate = F.lit(sampling.DEFAULT_RATE_BP)
     for lang, bp in sampling.STRATA_RATES_BP.items():
         rate = F.when(F.col("lang") == lang, bp).otherwise(rate)
-    bucket = sampling._hash_bucket("strat:", 10000)
+    bucket = sampling.keyed_hash("strat:", "doc_id") % 10000
     sub = {r["doc_id"] for r in docs.where(bucket < rate).collect()}
     assert sub == {d for d in full if d < 250}
 

@@ -115,7 +115,7 @@ def test_mixture_epochs_exact_copy_counts(spark):
         (F.lit(500000) + F.lit(250000)
          * (F.regexp_extract("source", r"([0-9]+)$", 1).cast("long") % 8)
          ).alias("eppm"),
-        (sampling._hash_bucket("epoch:", 1000000)).alias("draw"),
+        (sampling.keyed_hash("epoch:", "doc_id") % 1000000).alias("draw"),
     ).collect()
     spec = {r["doc_id"]: r for r in docs}
     assert {r["doc_id"] for r in per_doc} <= set(spec)
@@ -146,7 +146,7 @@ def test_mixture_epochs_stable_under_growth(spark):
     d = docs.select(
         "doc_id",
         (F.lit(500000) + F.lit(250000) * (num % 8)).alias("eppm"),
-        sampling._hash_bucket("epoch:", 1000000).alias("draw"),
+        (sampling.keyed_hash("epoch:", "doc_id") % 1000000).alias("draw"),
     )
     sub = {
         (r["doc_id"], e)
