@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from extractor.ops.iterate import iterate, max_normalize
 from extractor.ops.sampling import keyed_hash
 
 
@@ -1133,10 +1134,8 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
     ).select(
         "conv_id", F.coalesce("wins", F.lit(0)).cast("long").alias("wins")
     ).localCheckpoint()
-    p = items.select(
-        "conv_id", F.lit(scale).cast("long").alias("pv")
-    )
-    for _ in range(rounds):
+
+    def step(p: DataFrame, _r: int) -> DataFrame:
         t = (
             comp.join(
                 F.broadcast(
@@ -1171,12 +1170,13 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
             F.expr(f"wins * {big} DIV greatest(dsum, 1)")
             .cast("long")
             .alias("raw"),
-        ).localCheckpoint()
-        pmax = praw.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        p = praw.crossJoin(F.broadcast(pmax)).select(
-            "conv_id",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("pv"),
-        ).localCheckpoint()
+        )
+        return max_normalize(praw, "conv_id", "pv", scale)
+
+    p, _ = iterate(
+        step, items.select("conv_id", F.lit(scale).cast("long").alias("pv")),
+        rounds,
+    )
     return wins.join(p, "conv_id").select(
         F.col("conv_id").cast("long").alias("conv_id"),
         "wins",

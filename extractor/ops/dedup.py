@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.fanout import fan_out_scan, post_shuffle_filter
+from extractor.ops.iterate import iterate, unchanged
 from extractor.ops.sampling import keyed_hash
 
 N_HASHES = 8
@@ -562,9 +563,8 @@ def neardup_clusters(
     rounds.  At web scale swap the propagation step for the
     large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14) — O(log n) rounds on any
-    topology with the same join/agg shape.  Per-round driver work is one
-    bounded ``count()`` on the changed-label set; ``localCheckpoint``
-    truncates the growing lineage each round.
+    topology with the same join/agg shape.  ``iterate`` cuts the lineage
+    each round; per-round driver work is its exact ``unchanged`` probe.
 
     Output: (doc_id, cluster_id, cluster_size) for every node in the
     graph, cluster_size > 1 by construction.
@@ -605,7 +605,8 @@ def neardup_clusters(
         .withColumn("cluster_id", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         neighbor_min = (
             und.join(
                 labels.select(
@@ -618,26 +619,15 @@ def neardup_clusters(
             .agg(F.min("nbr_label").alias("nbr_min"))
             .select(F.col("doc_a").alias("doc_id"), "nbr_min")
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "cluster_id", F.coalesce("nbr_min", "cluster_id")
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                "cluster_id", F.coalesce("nbr_min", "cluster_id")
+            ).alias("cluster_id"),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
+
+    labels, converged = iterate(step, labels, max_iters, until=unchanged)
+    if not converged:
         # never silently return a non-converged labeling: wrong cluster
         # assignments with no signal are worse than a loud failure
         raise RuntimeError(
@@ -649,8 +639,6 @@ def neardup_clusters(
     # one row per CLUSTER, which at web scale is corpus-order (most dup
     # clusters are pairs) — never a broadcast side.  One shuffle on
     # cluster_id either way; the window skips the join entirely.
-    from pyspark.sql.window import Window as _W
-
     return labels.select(
         "doc_id",
         "cluster_id",
@@ -673,9 +661,9 @@ def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
     - small-star(u):  over edges with v ≤ u only, emit (v, m) ∪ (u, m)
       for the same local min m
 
-    Convergence: the edge multiset stops changing (compared by a tiny
-    count + hash-sum aggregate, one row); converged state is a star from
-    every node to its component min."""
+    Convergence: the edge set stops changing (``iterate``'s exact
+    ``unchanged`` test); converged state is a star from every node to its
+    component min."""
     from pyspark.sql.window import Window
 
     def star(edges: DataFrame, large: bool) -> DataFrame:
@@ -700,23 +688,15 @@ def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
             )
         return out.where(F.col("u") != F.col("v")).distinct()
 
-    def fingerprint(edges: DataFrame):
-        row = edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    edges = und.select("u", "v").where(F.col("u") != F.col("v")).distinct()
-    edges = edges.localCheckpoint()
-    fp = fingerprint(edges)
-    for _ in range(max_iters):
-        edges = star(star(edges, large=True), large=False).localCheckpoint()
-        fp_new = fingerprint(edges)
-        if fp_new == fp:
-            break
-        fp = fp_new
-    else:
+    edges = (
+        und.select("u", "v").where(F.col("u") != F.col("v")).distinct()
+        .localCheckpoint()
+    )
+    edges, converged = iterate(
+        lambda cur, _r: star(star(cur, large=True), large=False),
+        edges, max_iters, until=unchanged,
+    )
+    if not converged:
         raise RuntimeError(
             f"large-star/small-star did not converge within max_iters="
             f"{max_iters} — O(log^2 n) bound exceeded; raise max_iters"

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from extractor.ops.iterate import iterate, max_normalize, unchanged
 from extractor.ops.sampling import keyed_hash
 
 LINK_SCHEMA = "doc_id long, href string, anchor string"
@@ -186,11 +187,10 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     dst-keyed partial-aggregated contribution sum plus the node-sized
     rebase join that re-adds the teleport base.  At 10^8+
     nodes swap the broadcast for a src-bucketed sort-merge join; the
-    edge-side-never-moves property survives either way.  Each round's
-    rank vector is ``localCheckpoint``-ed (node-cardinality rows, cheap)
-    so downstream actions replay one materialized vector instead of
-    re-deriving the whole k-round lineage — the same cut
-    :func:`hits`/:func:`bfs_hop_distance`/``_cc_two_phase`` apply.
+    edge-side-never-moves property survives either way.  ``iterate``
+    (``extractor/ops/iterate.py``) cuts each round's rank vector
+    (node-cardinality rows, cheap) so downstream actions replay one
+    materialized vector instead of re-deriving the k-round lineage.
 
     ``materialize=False`` (plan-gate seam, same contract as
     :func:`kcore`/:func:`hits`) skips every persist/checkpoint and
@@ -214,8 +214,8 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         weighted = weighted.persist()
         nodes = nodes.persist()
     base = scale * (100 - damping_pct) // 100
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
-    for it in range(iterations):
+
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contribs = (
             weighted.join(
                 F.broadcast(ranks), weighted["src"] == ranks["node"]
@@ -230,7 +230,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
             .groupBy("dst")
             .agg(F.sum(F.expr("num DIV denom")).alias("inflow"))
         )
-        ranks = nodes.join(
+        return nodes.join(
             contribs, nodes["node"] == contribs["dst"], "left"
         ).select(
             "node",
@@ -238,16 +238,14 @@ def pagerank(edges: DataFrame, iterations: int = 5,
             .cast("long")
             .alias("rank"),
         )
-        # lineage cut BETWEEN iterations: every earlier round reads one
-        # materialized node-cardinality vector instead of replaying the
-        # whole k-round chain
-        if materialize and it < iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks, _ = iterate(
+        step, nodes.select("node", F.lit(scale).cast("long").alias("rank")),
+        iterations, materialize=materialize,
+    )
     if materialize:
-        # eager materialization (cascades the lazy per-round checkpoints
-        # in one job tree), then release the caches — repeated pagerank
-        # calls must not accumulate persisted edge tables
-        ranks = ranks.localCheckpoint()
+        # the result is materialized: release the caches — repeated
+        # pagerank calls must not accumulate persisted edge tables
         e.unpersist()
         weighted.unpersist()
         nodes.unpersist()
@@ -358,15 +356,16 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
     semi-join over edges plus two node-cardinality hash ops (the
     anti-join and the union-dedup).  ``dist`` stays node-sized.  Rounds
     are bounded by *max_hops* (graph diameter in practice — O(log n) on
-    web graphs); the one driver-side action per round is an empty-check
-    on the frontier, which also cuts lineage via ``localCheckpoint``."""
+    web graphs, and a true bound, not a budget); ``iterate`` stops early
+    once a round adds no node, i.e. the next frontier is empty."""
     e = edges.select("src", "dst").persist()
     dist = seeds.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("hops"),
     ).localCheckpoint()
-    frontier = dist.select("node")
-    for k in range(1, max_hops + 1):
+
+    def step(dist: DataFrame, k: int) -> DataFrame:
+        frontier = dist.where(F.col("hops") == k - 1).select("node")
         reached = (
             e.join(F.broadcast(frontier), e["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
@@ -374,11 +373,14 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
         )
         new = reached.join(dist, "node", "left_anti").select(
             "node", F.lit(k).cast("long").alias("hops")
-        ).localCheckpoint()  # eager: the isEmpty probe reads it next
-        if new.rdd.isEmpty():
-            break
-        dist = dist.unionAll(new).localCheckpoint(eager=False)
-        frontier = new.select("node")
+        )
+        return dist.unionAll(new)
+
+    # no node added in round k: round k+1's frontier is empty
+    dist, _ = iterate(
+        step, dist, max_hops,
+        until=lambda prev, cur: cur.count() == prev.count(),
+    )
     e.unpersist()
     return dist
 
@@ -476,9 +478,9 @@ def hits(edges: DataFrame, iterations: int = 3,
     Unlike :func:`pagerank` (one self-reference per round → linear
     lineage), each half-round here reads the previous vector TWICE (the
     edge-sum and the 1-row max), so an unbroken lineage doubles per
-    half-round — 2^(2k) recompute.  Each normalized vector is therefore
-    ``localCheckpoint``-ed (node-cardinality rows, cheap) to keep every
-    round O(edges).
+    half-round — 2^(2k) recompute.  ``max_normalize`` therefore cuts each
+    raw vector (node-cardinality rows, cheap), and ``iterate`` each round's
+    pair, to keep every round O(edges).
 
     Scale posture (~10^11 edges, ~10^8 nodes): identical to
     :func:`pagerank` — both score vectors are node-sized and BROADCAST
@@ -501,55 +503,33 @@ def hits(edges: DataFrame, iterations: int = 3,
     if materialize:
         nodes = nodes.persist()
 
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if materialize else df
+    def raw_sum(vec: DataFrame, on: str, by: str) -> DataFrame:
+        # (node, raw): Σ of vec's score over each node's edges, 0 if none
+        s = (
+            e.join(F.broadcast(vec), e[on] == vec["node"])
+            .groupBy(by)
+            .agg(F.sum(vec.columns[1]).cast("long").alias("s"))
+        )
+        return nodes.join(s, nodes["node"] == s[by], "left").select(
+            "node", F.coalesce("s", F.lit(0)).cast("long").alias("raw")
+        )
 
-    auth = nodes.select("node", F.lit(scale).cast("long").alias("auth"))
-    hub = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
-    for _ in range(iterations):
-        a_raw = (
-            e.join(F.broadcast(hub), e["src"] == hub["node"])
-            .groupBy("dst")
-            .agg(F.sum("hub").cast("long").alias("s"))
-        )
-        auth = (
-            nodes.join(a_raw, nodes["node"] == a_raw["dst"], "left")
-            .select(
-                "node",
-                F.coalesce("s", F.lit(0)).cast("long").alias("raw"),
-            )
-        )
-        auth = _cut(auth)
-        amax = auth.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        auth = auth.crossJoin(F.broadcast(amax)).select(
-            "node",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("auth"),
-        )
-        auth = _cut(auth)
-        h_raw = (
-            e.join(F.broadcast(auth), e["dst"] == auth["node"])
-            .groupBy("src")
-            .agg(F.sum("auth").cast("long").alias("s"))
-        )
-        hub = (
-            nodes.join(h_raw, nodes["node"] == h_raw["src"], "left")
-            .select(
-                "node",
-                F.coalesce("s", F.lit(0)).cast("long").alias("raw"),
-            )
-        )
-        hub = _cut(hub)
-        hmax = hub.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        hub = hub.crossJoin(F.broadcast(hmax)).select(
-            "node",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("hub"),
-        )
-        hub = _cut(hub)
-    # one EAGER materialization at the end (cascades through the lazy
-    # per-round checkpoints in a single job tree) before the caches drop
+    def step(state, _r: int):
+        _, hub = state
+        auth = max_normalize(raw_sum(hub, "src", "dst"), "node", "auth",
+                             scale, materialize)
+        hub = max_normalize(raw_sum(auth, "dst", "src"), "node", "hub",
+                            scale, materialize)
+        return auth, hub
+
+    (auth, hub), _ = iterate(
+        step,
+        (nodes.select("node", F.lit(scale).cast("long").alias("auth")),
+         nodes.select("node", F.lit(scale).cast("long").alias("hub"))),
+        iterations, materialize=materialize,
+    )
     out = auth.join(hub, "node").select("node", "auth", "hub")
     if materialize:
-        out = out.localCheckpoint()
         e.unpersist()
         nodes.unpersist()
     return out
@@ -572,10 +552,10 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4,
     persisted once and NEVER re-shuffled — each round's degree count
     joins it against two BROADCAST copies of the (node-cardinality,
     shrinking) alive set, then one map-side-combined count per src.
-    The alive set is read twice per round (src- and dst-side), so it is
-    ``localCheckpoint``-ed to keep lineage linear.  At 10^8+ surviving
-    nodes, swap the broadcasts for src/dst-bucketed semi-joins; the
-    edge table still never moves."""
+    The alive set is read twice per round (src- and dst-side), so
+    ``iterate`` cuts each round's degrees to keep lineage linear.  At
+    10^8+ surviving nodes, swap the broadcasts for src/dst-bucketed
+    semi-joins; the edge table still never moves."""
     e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     e = e0.union(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -584,39 +564,23 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4,
         # plan-gate callers (materialize=False) get a pure lazy plan —
         # nothing cached, nothing for them to release
         e = e.persist()
-    alive = (
-        e.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    )
 
-    def _induced_degree(surv: DataFrame) -> DataFrame:
+    def step(deg: DataFrame, _r: int) -> DataFrame:
+        # the induced degree among the nodes whose degree survived round r-1
+        alive = deg.where(F.col("deg") >= k).select("src")
         return (
-            e.join(
-                F.broadcast(surv.select(F.col("node").alias("src"))), "src"
-            )
-            .join(
-                F.broadcast(surv.select(F.col("node").alias("dst"))), "dst"
-            )
+            e.join(F.broadcast(alive), "src")
+            .join(F.broadcast(alive.select(F.col("src").alias("dst"))), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         )
 
-    for _ in range(rounds):
-        alive = (
-            _induced_degree(alive)
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=False)
-        )
-    out = _induced_degree(alive).select(
-        F.col("src").cast("long").alias("node"), "deg"
-    )
+    # round 0: every node survives, so its induced degree is its degree
+    deg0 = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    deg, _ = iterate(step, deg0, rounds, materialize=materialize)
     if materialize:
-        # materialize before releasing the edge cache (the default);
-        # materialize=False never persisted anything, so the lazy plan
-        # it returns carries no cache to release
-        out = out.localCheckpoint()
         e.unpersist()
-    return out
+    return deg.select(F.col("src").cast("long").alias("node"), "deg")
 
 
 def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
@@ -635,8 +599,8 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     once and never re-shuffles; each round BROADCASTS the (node-sized)
     label vector onto it, counts (node, neighbor-label) pairs with one
     map-side-combined aggregate, and takes the per-node argmax as ONE
-    struct-max aggregate (no row_number window).  The label vector is
-    ``localCheckpoint``-ed per round to keep lineage flat.  Labels are
+    struct-max aggregate (no row_number window).  ``iterate`` cuts the
+    label vector per round to keep lineage flat.  Labels are
     node ids (nonnegative), so ``max(struct(cnt, -label))`` encodes
     "highest count, then smallest label" without a sort.
 
@@ -649,13 +613,8 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
         .distinct()
         .persist()
     )
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").cast("long").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(rounds):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         votes = (
             e.join(
                 F.broadcast(
@@ -669,19 +628,23 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
             .groupBy(F.col("dst").alias("node"), "nb_label")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        labels = (
+        return (
             votes.groupBy("node")
             .agg(F.max(F.struct("cnt", (-F.col("nb_label")).alias("neg"))).alias("m"))
             .select(
                 "node", (-F.col("m.neg")).cast("long").alias("label")
             )
-            .localCheckpoint(eager=False)
         )
-    out = labels.select(
-        F.col("node").cast("long").alias("node"), "label"
-    ).localCheckpoint()  # eager: materialize before releasing the edge cache
+
+    labels, _ = iterate(
+        step,
+        e.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").cast("long").alias("label")),
+        rounds,
+    )
     e.unpersist()
-    return out
+    return labels.select(F.col("node").cast("long").alias("node"), "label")
 
 
 def jaccard_linkpred(
@@ -780,16 +743,16 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     every round re-relaxes all edges Bellman-Ford-style).
 
     Iterates ``depth(v) ← max(depth(v), max over in-edges (depth(u)+1))``
-    to a FIXPOINT, verified by a 1-row changed-count aggregate per round
-    (same convergence contract as ``dedup._cc_two_phase``); raises if
+    to a FIXPOINT, checked per round by ``iterate``'s exact ``unchanged``
+    test (``extractor/ops/iterate.py``); raises if
     ``max_rounds`` is exhausted first rather than return wrong depths.
     Rounds needed = longest path length, O(diameter) like every
     label-relaxation algorithm here.
 
     Scale posture: the edge table never re-shuffles; each round joins it
     against a BROADCAST of the (node-sized) depth vector, one map-side
-    combined max per dst, and the convergence check is a 1-row count —
-    the driver never sees per-node data.
+    combined max per dst, and the convergence check is one aggregate
+    whose emptiness is probed — the driver never sees per-node data.
 
     Output: ``(node, depth)``."""
     dag = (
@@ -808,8 +771,8 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
         .select("node", F.lit(0).cast("long").alias("depth"))
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_rounds):
+
+    def step(depth: DataFrame, _r: int) -> DataFrame:
         relaxed = (
             dag.join(
                 F.broadcast(
@@ -823,26 +786,14 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("d_src") + F.lit(1)).alias("d_in"))
         )
-        new_depth = (
-            depth.join(relaxed, "node", "left")
-            .select(
-                "node",
-                F.greatest(
-                    F.col("depth"), F.coalesce(F.col("d_in"), F.lit(0))
-                ).cast("long").alias("depth"),
-            )
-            .localCheckpoint()
+        return depth.join(relaxed, "node", "left").select(
+            "node",
+            F.greatest(
+                F.col("depth"), F.coalesce(F.col("d_in"), F.lit(0))
+            ).cast("long").alias("depth"),
         )
-        changed = (
-            new_depth.alias("n")
-            .join(depth.alias("o"), "node")
-            .where(F.col("n.depth") != F.col("o.depth"))
-            .count()
-        )
-        depth = new_depth
-        if changed == 0:
-            converged = True
-            break
+
+    depth, converged = iterate(step, depth, max_rounds, until=unchanged)
     dag.unpersist()
     if not converged:
         raise RuntimeError(

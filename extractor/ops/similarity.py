@@ -437,7 +437,8 @@ def kmeans_topics(
 ) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding corpus — topic-style
     clustering without MLlib, the iterative-NUMERIC sibling of the
-    iterative-graph connected components (``dedup._cc_two_phase``).
+    iterative-graph connected components (``dedup._cc_two_phase``); its
+    state lives on the driver, so unlike them it needs no ``iterate`` cuts.
 
     Per round: (1) assignment + per-batch PARTIAL centroid sums happen in
     one Arrow kernel pass (numpy matmul against the broadcast centroid
