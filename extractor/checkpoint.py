@@ -36,7 +36,8 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F, types as T
 
 from .pipeline import extract_transcripts
 
@@ -132,19 +133,28 @@ def _schema_key(cols: list[str]) -> str:
     return ",".join(sorted(cols))
 
 
-def _bucket_fingerprints(df: DataFrame, n_buckets: int) -> DataFrame:
-    """One (n, h) fingerprint row per bucket: exact decimal SUM of per-row
-    xxhash64 over every column — order-insensitive, multiplicity-sensitive
-    (see ``changed_buckets``)."""
+def _fingerprint(df: DataFrame) -> tuple[Column, Column]:
+    """The content fingerprint aggregate pair ``(n, h)``: row count and
+    exact decimal SUM of per-row xxhash64 over every column of *df* —
+    order-insensitive, multiplicity-sensitive (see ``changed_buckets``)."""
     cols = sorted(df.columns)
     return (
-        with_bucket(df, n_buckets)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
-        )
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
     )
+
+
+def content_fingerprint(df: DataFrame) -> tuple:
+    """Whole-table ``(n, h)`` fingerprint: equal pairs mean equal row
+    multisets (up to hash collision), so a rewrite can be verified before
+    it is published."""
+    row = df.agg(*_fingerprint(df)).collect()[0]
+    return int(row["n"]), row["h"]
+
+
+def _bucket_fingerprints(df: DataFrame, n_buckets: int) -> DataFrame:
+    """One ``(n, h)`` fingerprint row per bucket."""
+    return with_bucket(df, n_buckets).groupBy("bucket").agg(*_fingerprint(df))
 
 
 def _write_fingerprints(
@@ -277,6 +287,20 @@ def _diff_fingerprints(
     )
 
 
+def _check_budgets(
+    n_buckets: int, groups_per_round: int = 1, max_retries: int = 1, **_
+) -> None:
+    """Reject a budget below 1.  Takes ``run_incremental``'s forwarded
+    kwargs as they are: an absent budget gets its valid default later."""
+    for name, value in (
+        ("n_buckets", n_buckets),
+        ("groups_per_round", groups_per_round),
+        ("max_retries", max_retries),
+    ):
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
+
+
 def run_incremental(
     old_df: DataFrame | None,
     new_df: DataFrame,
@@ -307,6 +331,7 @@ def run_incremental(
     is NEVER scanned — *old_df* may then be ``None``.  With stored
     fingerprints each snapshot in an incremental chain is scanned exactly
     once, as its own "new" side."""
+    _check_budgets(n_buckets, **kwargs)
     spark = new_df.sparkSession
     key = _schema_key(new_df.columns)
     old_fp = stored_fingerprints(spark, ckpt_dir, old_snapshot, key)
@@ -375,7 +400,6 @@ def run_with_checkpoint(
     max_retries: int = 3,
     partition_mode: str = "map_only",
     failure_hook=None,
-    bucket_discovery: str = "dense",
 ) -> dict:
     """Run extraction resumably. Returns a summary dict (A4/A5 analogue).
 
@@ -383,28 +407,20 @@ def run_with_checkpoint(
     kernel — the deterministic fault-injection port of the reference's
     mock-based retry test (``test_retry_mechanism.py:99-119``).
 
-    *bucket_discovery*: ``"dense"`` (default) derives the remaining work
-    as ``range(n_buckets)`` minus the checkpoint's completed set — ZERO
-    input scans before round 1 (buckets are dense by construction at
-    scale: pmod(xxhash64) over 10^12 conv_ids leaves no bucket empty; an
-    empty bucket on a tiny corpus just makes its group's job trivially
-    small).  ``"scan"`` enumerates the distinct buckets actually present
-    in the input (one extra column-pruned pass) — only useful to skip
-    empty-bucket groups on very sparse test corpora.
+    The remaining work is ``range(n_buckets)`` minus the checkpoint's
+    completed set — ZERO input scans before round 1 (buckets are dense by
+    construction at scale: pmod(xxhash64) over 10^12 conv_ids leaves no
+    bucket empty; an empty bucket on a tiny corpus just makes its group's
+    job trivially small).
     """
+    _check_budgets(n_buckets, groups_per_round, max_retries)
     spark = input_df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     df = with_bucket(input_df, n_buckets)
     completed = _completed_buckets(spark, ckpt_dir, snapshot_id)
     completed_set = {r["bucket"] for r in completed.collect()}
-    if bucket_discovery == "dense":
-        remaining = sorted(set(range(n_buckets)) - completed_set)
-    else:
-        present = {
-            r["bucket"] for r in df.select("bucket").distinct().collect()
-        }
-        remaining = sorted(present - completed_set)
+    remaining = sorted(set(range(n_buckets)) - completed_set)
     already_done = len(completed_set)
 
     summary = {
@@ -506,31 +522,6 @@ def run_with_checkpoint(
     return summary
 
 
-def _recover_or_drop_bak(target: str) -> None:
-    """Crash recovery for the rename-aside swap: a leftover .expire-bak
-    with no live target means we died between the two renames — restore
-    it; a .bak alongside a live target means the swap completed."""
-    import os
-    import shutil
-
-    bak = f"{target}.expire-bak"
-    if os.path.exists(bak):
-        if not os.path.exists(target):
-            os.rename(bak, target)
-        else:
-            shutil.rmtree(bak)
-
-
-def _swap_dir(target: str, staged: str) -> None:
-    import os
-    import shutil
-
-    bak = f"{target}.expire-bak"
-    os.rename(target, bak)
-    os.rename(staged, target)
-    shutil.rmtree(bak)
-
-
 def expire_checkpoint_history(
     spark: SparkSession, ckpt_dir: str, keep_last: int = 2
 ) -> dict:
@@ -548,9 +539,9 @@ def expire_checkpoint_history(
     Safety: the rewrite is content-verified BEFORE any swap (the
     retained status subset's count + decimal-xxhash fingerprint must be
     identical in the staged copy — raises and leaves the store untouched
-    otherwise), and each table is swapped with the module's
-    crash-recoverable rename-aside sequence (a leftover ``.expire-bak``
-    from a crash between the two renames is restored on the next call).
+    otherwise), and each table is swapped with
+    ``extractor.publish.replace_dir`` (a leftover ``.expire-bak`` from a
+    crash between the two renames is restored on the next call).
     The newest snapshot's fingerprints are always retained, so the
     incremental fast path (``stored_fingerprints``) survives expiration.
 
@@ -561,10 +552,12 @@ def expire_checkpoint_history(
     import shutil
     import tempfile
 
+    from .publish import recover_dir, replace_dir
+
     status_dir = f"{ckpt_dir}/status"
     fp_dir = f"{ckpt_dir}/fingerprints"
-    _recover_or_drop_bak(status_dir)
-    _recover_or_drop_bak(fp_dir)
+    recover_dir(status_dir, f"{status_dir}.expire-bak")
+    recover_dir(fp_dir, f"{fp_dir}.expire-bak")
 
     status = spark.read.schema(CHECKPOINT_SCHEMA).parquet(status_dir)
     has_fp = os.path.exists(fp_dir)
@@ -592,20 +585,11 @@ def expire_checkpoint_history(
     ]
     kept = set(snaps[:keep_last])
 
-    def fingerprint(df: DataFrame):
-        cols = sorted(df.columns)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
     keep_status = status.where(F.col("snapshot_id").isin(kept))
-    before = fingerprint(keep_status)
+    before = content_fingerprint(keep_status)
     rows_before = status.count()
 
-    # staging must share the store's filesystem so the swap renames are
-    # atomic (a /tmp staging dir would make os.rename fail with EXDEV)
+    # staged on the store's filesystem, as replace_dir requires
     staging = tempfile.mkdtemp(
         prefix="ckpt-expire-", dir=os.path.abspath(ckpt_dir)
     )
@@ -619,7 +603,7 @@ def expire_checkpoint_history(
                 1
             ).write.mode("overwrite").parquet(new_fp)
         # verify the staged copy BEFORE swapping anything
-        after = fingerprint(
+        after = content_fingerprint(
             spark.read.schema(CHECKPOINT_SCHEMA).parquet(new_status)
         )
         if after != before:
@@ -627,9 +611,9 @@ def expire_checkpoint_history(
                 f"expire content mismatch on {ckpt_dir}: "
                 f"{before} -> {after}; not swapping"
             )
-        _swap_dir(status_dir, new_status)
+        replace_dir(new_status, status_dir, f"{status_dir}.expire-bak")
         if has_fp:
-            _swap_dir(fp_dir, new_fp)
+            replace_dir(new_fp, fp_dir, f"{fp_dir}.expire-bak")
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return {

@@ -3,14 +3,15 @@ packed training data into the newline-delimited-JSON shard files a
 trainer's data loader actually reads, with an atomically-published,
 read-back-verified manifest.
 
-Same publish discipline as ``extractor/manifest_sink.py`` and
-``streaming.stream_upsert_sink``: ALL data is written to a ``.tmp``
-staging directory, the manifest is computed by READING THE STAGED FILES
-BACK (not from the upstream DataFrame — the manifest certifies what is
-on disk, not what was supposed to be), written into the staging dir,
-and only then is the directory renamed into place.  A crash anywhere
-before the rename leaves no visible export; a leftover ``.tmp`` is
-ignored by readers and overwritten by the next attempt.
+Same publish discipline as ``extractor/manifest_sink.py``: ALL data is
+written to a ``.tmp`` staging directory, the manifest is computed by
+READING THE STAGED FILES BACK (not from the upstream DataFrame — the
+manifest certifies what is on disk, not what was supposed to be),
+written into the staging dir, and only then is the directory published
+with ``extractor.publish.replace_dir``.  A crash before the publish
+leaves no new export visible; a leftover ``.tmp`` is ignored by readers
+and overwritten by the next attempt, and a crash inside the publish is
+repaired at the start of the next attempt, even one that fails.
 
 Scale posture (100 TB): one shuffle (``repartition`` on the shard key)
 co-locates each shard into a single task so ``partitionBy`` emits one
@@ -34,6 +35,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from extractor.publish import recover_dir, replace_dir
+
 MANIFEST_NAME = "_export_manifest.json"
 
 
@@ -44,7 +47,8 @@ def export_jsonl_shards(df: DataFrame, out_dir: str,
     counts computed from the staged files).  Overwrites any previous
     export at *out_dir*."""
     spark = df.sparkSession
-    tmp = out_dir + ".tmp"
+    tmp, bak = out_dir + ".tmp", out_dir + ".bak"
+    recover_dir(out_dir, bak)
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     (
@@ -78,14 +82,7 @@ def export_jsonl_shards(df: DataFrame, out_dir: str,
     }
     with open(os.path.join(tmp, MANIFEST_NAME), "w") as f:
         json.dump(manifest, f, sort_keys=True)
-    bak = out_dir + ".bak"
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    if os.path.exists(out_dir):
-        os.rename(out_dir, bak)
-    os.rename(tmp, out_dir)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
+    replace_dir(tmp, out_dir, bak)
     return manifest
 
 

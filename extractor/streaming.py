@@ -169,37 +169,31 @@ def stream_upsert_sink(
     (``relational.s3_merge_upsert`` topology): surviving target rows come
     from an anti join whose BROADCAST side is the batch's key set — the
     10^12-row target never builds a hash table.  On a real deployment the
-    batch body is one Iceberg ``MERGE INTO``; here the CoW result lands
-    via write-temp + rename-aside swap (the parquet stand-in for a
+    batch body is one Iceberg ``MERGE INTO``; here every batch's result,
+    the first included, lands via write-temp +
+    ``extractor.publish.replace_dir`` (the parquet stand-in for a
     snapshot commit).  Spark's streaming checkpoint makes batch delivery
     effectively-once; the merge itself is idempotent (re-running a batch
     yields the same table), so the sink is exactly-once end-to-end.
 
     Crash recovery across the swap: the published table is never deleted
-    before its replacement is in place — the old target is renamed ASIDE
-    (``.bak``), the tmp renamed in, then the ``.bak`` dropped.  A crash
-    between any two steps leaves either the old target, or a ``.bak`` that
-    the next batch (or restart) restores before merging, so checkpoint
-    replay always merges against the last published state instead of
-    rebuilding the table from one batch."""
+    before its replacement is in place.  A crash between the two renames
+    leaves a ``.bak`` that the next batch (or restart) restores before
+    merging, so checkpoint replay always merges against the last
+    published state instead of rebuilding the table from one batch."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from extractor.publish import recover_dir, replace_dir
+
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
     bak = f"{target_dir}.bak"
 
     def merge_batch(batch_df, batch_id):
-        # recover a crash mid-swap from a previous batch: target missing
-        # but .bak present -> the old table was renamed aside and the crash
-        # hit before (or during) the tmp rename; restore it.
-        if os.path.exists(bak):
-            if not os.path.exists(target_dir):
-                os.rename(bak, target_dir)
-            else:
-                shutil.rmtree(bak)  # swap completed; drop the leftover
+        recover_dir(target_dir, bak)  # a crashed swap hides the target
         w = Window.partitionBy("conv_id", "turn_idx").orderBy(
             F.desc("ts"), F.desc("role")
         )
@@ -214,15 +208,11 @@ def stream_upsert_sink(
         if os.path.exists(target_dir):
             target = batch_df.sparkSession.read.parquet(target_dir)
             keys = batch.select("conv_id", "turn_idx")
-            kept = target.join(
+            batch = target.join(
                 F.broadcast(keys), ["conv_id", "turn_idx"], "left_anti"
-            )
-            kept.unionByName(batch).write.mode("overwrite").parquet(tmp)
-            os.rename(target_dir, bak)
-            os.rename(tmp, target_dir)
-            shutil.rmtree(bak)
-        else:
-            batch.write.mode("overwrite").parquet(target_dir)
+            ).unionByName(batch)
+        batch.write.mode("overwrite").parquet(tmp)
+        replace_dir(tmp, target_dir, bak)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

@@ -6,6 +6,7 @@ import json
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from extractor.ops.export import (
     MANIFEST_NAME,
@@ -83,3 +84,16 @@ def test_export_empty_input_publishes_empty_manifest(spark, tmp_path):
     manifest = export_jsonl_shards(empty, out)
     assert manifest == {"shards": {}, "n_rows": 0, "n_shards": 0}
     assert read_export_manifest(out) == manifest
+
+
+def test_export_restores_backup_after_crash_window(spark, tmp_path):
+    """A crash between the publish renames leaves only ``.bak``; the next
+    attempt restores it first, so even a failing export leaves the last
+    published export readable."""
+    out = str(tmp_path / "shards")
+    first = export_jsonl_shards(_df(spark), out)
+    os.rename(out, out + ".bak")  # simulate the crash window
+    with pytest.raises(AnalysisException):
+        export_jsonl_shards(_df(spark).drop("shard"), out)
+    assert read_export_manifest(out) == first
+    assert not os.path.exists(out + ".bak")

@@ -366,3 +366,29 @@ def test_incremental_uses_stored_fingerprints_without_old_scan(
         for r in spark.read.parquet(out).collect()
     )
     assert got == _clean_rows(spark, s3_df)
+
+
+@pytest.mark.parametrize("entry", ["run_with_checkpoint", "run_incremental"])
+@pytest.mark.parametrize(
+    "budget",
+    [
+        {"n_buckets": 0},
+        {"n_buckets": -2},
+        {"groups_per_round": 0},
+        {"groups_per_round": -1},
+        {"max_retries": 0},
+    ],
+    ids=lambda b: "%s=%d" % next(iter(b.items())),
+)
+def test_nonsense_budgets_rejected_before_any_write(
+    spark, corpus, tmp_path, entry, budget
+):
+    from extractor import checkpoint
+
+    ckpt = tmp_path / "ckpt"
+    args = (corpus, str(tmp_path / "out"), str(ckpt))
+    if entry == "run_incremental":
+        args = (corpus, *args, "snap-0", "snap-1")
+    with pytest.raises(ValueError, match=next(iter(budget))):
+        getattr(checkpoint, entry)(*args, **budget)
+    assert not ckpt.exists()
