@@ -188,9 +188,3 @@ def aes_cbc_decrypt(key: bytes, iv: bytes, ciphertext: bytes,
     if not 1 <= n <= 16 or out[-n:] != bytes([n]) * n:
         raise ValueError("bad AES-CBC padding")
     return bytes(out[:-n])
-
-
-def _encrypt_block_public(key: bytes, block: bytes) -> bytes:
-    """Single-block ECB encrypt — exposed for the FIPS-197 Appendix C
-    known-answer test only."""
-    return _encrypt_block(block, _expand_key(key))

@@ -1,4 +1,5 @@
-"""Real audio codec, stdlib only: RIFF/WAVE PCM (encode + decode).
+"""Real audio codec, stdlib only: RIFF/WAVE PCM decode (the fixture
+encoder lives in ``tests/codec_encoders.py``).
 
 The audio counterpart of ``extractor/imagecodec.py``: WAV is a plain
 RIFF container over PCM samples — fully stdlib-decodable (``wave`` +
@@ -17,36 +18,6 @@ from __future__ import annotations
 import io
 import struct
 import wave
-
-
-def wav_encode(
-    samples,
-    sample_rate: int = 16000,
-    n_channels: int = 1,
-    sampwidth: int = 2,
-) -> bytes:
-    """Write a real PCM WAV.  *samples* is a flat iterable of floats in
-    [-1, 1] (interleaved if multi-channel).  Deterministic."""
-    if sampwidth not in (1, 2):
-        raise ValueError("sampwidth must be 1 or 2 bytes")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(sampwidth)
-        w.setframerate(sample_rate)
-        if sampwidth == 2:
-            pcm = b"".join(
-                struct.pack(
-                    "<h", max(-32768, min(32767, int(round(s * 32767.0))))
-                )
-                for s in samples
-            )
-        else:
-            pcm = bytes(
-                max(0, min(255, int(round((s + 1.0) * 127.5)))) for s in samples
-            )
-        w.writeframes(pcm)
-    return buf.getvalue()
 
 
 def wav_decode(payload: bytes):

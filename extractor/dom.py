@@ -17,6 +17,14 @@ environment).  Mirrored behaviors, each pinned by the reference code:
 Design note (scale): this module is pure Python and runs *inside* the Arrow
 batch kernel on executors; it holds one document at a time and allocates
 O(document size), never O(partition size).
+
+Two tokenizers feed the same tree rules (``_open_element``/
+``_close_element``): a regex fast tokenizer that constructs no
+``HTMLParser`` (gate: no comment, declaration, processing instruction,
+bogus ``<``, script/style or junk-in-tag anywhere in the document) and the
+authoritative stdlib ``HTMLParser`` builder for everything else.  Both
+return a ``Document`` that lists every element in document order, so the
+kernel's special-element pass needs no tree walk.
 """
 
 from __future__ import annotations
@@ -184,10 +192,81 @@ class Element:
 MAX_DOM_DEPTH = 150
 
 
+class Document(Element):
+    """The parse root (tag ``[document]``) plus ``elements``: every element
+    the builder created, in creation order.  Creation order is preorder (a
+    builder only ever appends a new element as the LAST child of an open
+    one), so ``elements`` equals the ``iter_elements`` walk of the tree as
+    parsed — the special-element pass (kernel T7) reads it instead of
+    re-walking the tree.  ``replace_with`` does not update it (T7 filters
+    by ``is_attached_to`` where the reference would have re-searched), and
+    ``release`` uses it to drop the parent links once the caller is done
+    with the tree."""
+
+    __slots__ = ("elements",)
+
+    def __init__(self):
+        super().__init__("[document]")
+        self.elements: list = []
+
+    def release(self) -> None:
+        """Clear every parent link, so the tree holds no reference cycle
+        and is freed by reference counting as soon as the caller drops it
+        (each child↔parent pair is otherwise a cycle that only the cyclic
+        garbage collector reclaims, 13–15% of kernel CPU on transcript
+        batches).  The tree must not be mutated afterwards:
+        ``replace_with`` on a released element raises."""
+        for el in self.elements:
+            el.parent = None
+
+
+def _depth_error() -> RecursionError:
+    return RecursionError(
+        f"maximum recursion depth exceeded (DOM depth > {MAX_DOM_DEPTH})"
+    )
+
+
+def _open_element(stack: list, elements: list, tag: str, attrs: dict,
+                  closed: bool) -> None:
+    """The tree rules for one start tag, shared by both builders.  An open
+    tag (``closed`` false) checks the depth cap and pops the implicit
+    closers; the new element becomes the LAST child of the innermost open
+    element and is recorded in ``elements``; it stays open unless it is
+    void or self-closed (``<x/>``)."""
+    if not closed:
+        if len(stack) > MAX_DOM_DEPTH:
+            raise _depth_error()
+        closers = _IMPLICIT_CLOSERS.get(tag)
+        if closers:
+            while len(stack) > 1 and stack[-1].tag in closers:
+                stack.pop()
+    top = stack[-1]
+    el = Element(tag, attrs, top)
+    top.children.append(el)
+    elements.append(el)
+    if not closed and tag not in VOID_ELEMENTS:
+        stack.append(el)
+
+
+def _close_element(stack: list, tag: str) -> None:
+    """The tree rule for one end tag, shared by both builders: close the
+    innermost open *tag* and everything opened inside it.  Void and
+    unmatched close tags are ignored (lenient, like html.parser-backed
+    bs4)."""
+    if tag in VOID_ELEMENTS:
+        return
+    for i in range(len(stack) - 1, 0, -1):
+        if stack[i].tag == tag:
+            del stack[i:]
+            return
+
+
 class _TreeBuilder(HTMLParser):
+    """The authoritative builder: stdlib ``HTMLParser`` events → tree."""
+
     def __init__(self):
         super().__init__(convert_charrefs=True)
-        self.root = Element("[document]")
+        self.root = Document()
         self.stack = [self.root]
 
     def updatepos(self, i, j):
@@ -197,39 +276,15 @@ class _TreeBuilder(HTMLParser):
         return j
 
     def handle_starttag(self, tag, attrs):
-        if len(self.stack) > MAX_DOM_DEPTH:
-            raise RecursionError(
-                f"maximum recursion depth exceeded (DOM depth > {MAX_DOM_DEPTH})"
-            )
-        closers = _IMPLICIT_CLOSERS.get(tag)
-        if closers:
-            while len(self.stack) > 1 and self.stack[-1].tag in closers:
-                self.stack.pop()
-        el = Element(
-            tag,
-            {k: (v if v is not None else "") for k, v in attrs} if attrs else {},
-            None,
-        )
-        top = self.stack[-1]
-        el.parent = top
-        top.children.append(el)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(el)
+        _open_element(self.stack, self.root.elements, tag,
+                      {k: (v if v is not None else "") for k, v in attrs}, False)
 
     def handle_startendtag(self, tag, attrs):
-        el = Element(tag, {k: (v if v is not None else "") for k, v in attrs}, None)
-        top = self.stack[-1]
-        el.parent = top
-        top.children.append(el)
+        _open_element(self.stack, self.root.elements, tag,
+                      {k: (v if v is not None else "") for k, v in attrs}, True)
 
     def handle_endtag(self, tag):
-        if tag in VOID_ELEMENTS:
-            return
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
-        # Unmatched close tag: ignore (lenient, like html.parser-backed bs4).
+        _close_element(self.stack, tag)
 
     def handle_data(self, data):
         if data:
@@ -242,8 +297,11 @@ class _TreeBuilder(HTMLParser):
 # ``HTMLParser.goahead`` spends ~half the extraction kernel's time in generic
 # chunk scanning (interesting-char search, position bookkeeping, per-construct
 # dispatch).  Real transcript markup is overwhelmingly plain start/end tags
-# and text runs, so a single compiled regex can tokenize the common case and
-# drive the SAME ``_TreeBuilder`` handle_* methods directly.  Parity contract:
+# and text runs, so a single compiled regex tokenizes the common case (one
+# ``split`` call per document), with no ``HTMLParser`` construction, and
+# feeds the SAME tree-rule functions as ``_TreeBuilder`` (``_open_element``/
+# ``_close_element``: depth cap, implicit closers, void elements, lenient
+# unmatched close tags, the element list).  Parity contract:
 #
 # - the tokenizer only accepts documents made of (a) text runs containing no
 #   ``<`` and (b) start/end tags it re-parses with CPython's OWN
@@ -254,13 +312,13 @@ class _TreeBuilder(HTMLParser):
 #   instructions, bogus ``<``, script/style CDATA, junk-in-start-tag,
 #   incomplete tags — returns None and the caller re-parses with the stdlib
 #   ``HTMLParser`` path, which is authoritative.  Falling back is always
-#   correct; the fast path is only taken when it is provably equivalent
-#   (the end-state check below fails closed).
+#   correct; the fast path is only taken when it is provably equivalent.
 #
 # Equivalence is pinned by tests/test_dom_fast.py: tree-identical (tags,
 # attrs, exact text-node chunking) vs the stdlib builder on golden fixture
-# inputs, hand quirks, hypothesis-fuzzed soup, and the full bench corpus
-# (verified offline; see commit message).
+# inputs, hand quirks, hypothesis-fuzzed soup, and the bench transcripts
+# corpus; tests/test_kernel_corpus_digest.py pins both builders' element
+# list against the ``iter_elements`` walk.
 
 # One combined scan: a '<' not opening a plain start/end tag, or any
 # script/style mention (CDATA content model) — either sends the document
@@ -268,7 +326,7 @@ class _TreeBuilder(HTMLParser):
 _FAST_GATE = _re.compile(r"<(?![a-zA-Z]|/[a-zA-Z])|(?i:</?(?:script|style)\b)")
 _FAST_TAG = _re.compile(
     r"<(?:"
-    r"/\s*(?P<cname>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*"
+    r"/(?P<cname>\s*[a-zA-Z][-.a-zA-Z0-9:_]*\s*)"
     r"|(?P<name>[a-zA-Z][^\t\n\r\f />\x00]*)"
     r"(?P<body>(?:\"[^\"]*\"|'[^']*'|[^>\"'])*)"
     r")>"
@@ -276,85 +334,85 @@ _FAST_TAG = _re.compile(
 
 
 def _fast_parse(text: str):
-    """Tokenize *text* into a ``_TreeBuilder`` tree, or return None when any
+    """Tokenize *text* into a ``Document`` tree, or return None when any
     construct falls outside the verified common-case subset (caller falls
     back to the stdlib parser).  RecursionError (DOM depth cap) propagates —
     both paths raise it identically."""
     if _FAST_GATE.search(text):
         return None
-    builder = _TreeBuilder()
-    handle_data = builder.handle_data
-    handle_starttag = builder.handle_starttag
-    handle_endtag = builder.handle_endtag
+    root = Document()
+    elements = root.elements
+    stack = [root]
+    # split() yields [text, (cname, name, body, text)*], padded here to
+    # (text, cname, name, body) groups; every group keeps its token's full
+    # length (the end tag's group includes the whitespace around its name),
+    # so pos tracks each token's offset in text
+    parts = _FAST_TAG.split(text)
+    parts += (None, None, None)
+    it = iter(parts)
     pos = 0
-    for m in _FAST_TAG.finditer(text):
-        start = m.start()
-        if start > pos:
-            seg = text[pos:start]
+    for seg, cname, name, body in zip(it, it, it, it):
+        if seg:
+            pos += len(seg)
             if "<" in seg:  # a '<' the master regex skipped: not our subset
                 return None
-            handle_data(_unescape(seg) if "&" in seg else seg)
-        cname, name, body = m.group("cname", "name", "body")
+            if "&" in seg:
+                seg = _unescape(seg)
+            if seg:
+                stack[-1].children.append(seg)
         if cname is not None:
-            handle_endtag(cname.lower())
-            pos = m.end()
-            continue
-        # Attribute-free shortcut, the dominant case (<p>, <td>, <b>, ...):
-        # with an empty tag body, parse_starttag's tagfind/attrfind matches
-        # reduce to (lowercased name, no attrs, end '>'); a body of exactly
-        # '/' is the bare self-closing form (<br/>), whose '/' tagfind's
-        # trailing consumer never eats (negative lookahead before '>').
-        if not body:
-            handle_starttag(name.lower(), [])
-            pos = m.end()
-            continue
-        if body == "/":
-            builder.handle_startendtag(name.lower(), [])
-            pos = m.end()
-            continue
-        # Start tag: replicate HTMLParser.parse_starttag exactly, using
-        # CPython's own tolerant regexes on the original string.
-        endpos = m.end()
-        tm = _tagfind_tolerant.match(text, start + 1)
-        k = tm.end()
-        tag = tm.group(1).lower()
-        attrs = []
-        while k < endpos:
-            am = _attrfind_tolerant.match(text, k)
-            if not am:
-                break
-            attrname, rest, attrvalue = am.group(1, 2, 3)
-            if not rest:
-                attrvalue = None
-            elif (
-                attrvalue[:1] == "'" == attrvalue[-1:]
-                or attrvalue[:1] == '"' == attrvalue[-1:]
-            ):
-                attrvalue = attrvalue[1:-1]
-            if attrvalue:
-                attrvalue = _unescape(attrvalue)
-            attrs.append((attrname.lower(), attrvalue))
-            k = am.end()
-        end = text[k:endpos].strip()
-        if end == ">":
-            handle_starttag(tag, attrs)
-        elif end == "/>":
-            builder.handle_startendtag(tag, attrs)
-        else:
-            # junk characters in the start tag — stdlib emits the raw tag
-            # text as data; out of subset, fall back
-            return None
-        pos = endpos
-    if pos < len(text):
-        seg = text[pos:]
-        if "<" in seg:
-            return None
-        handle_data(_unescape(seg) if "&" in seg else seg)
-    return builder.root
+            pos += len(cname) + 3
+            _close_element(stack, cname.strip().lower())
+        elif name is not None:
+            start = pos
+            pos += len(name) + len(body) + 2
+            # Attribute-free shortcut, the dominant case (<p>, <td>, <b>, ...):
+            # with an empty tag body, parse_starttag's tagfind/attrfind matches
+            # reduce to (lowercased name, no attrs, end '>'); a body of exactly
+            # '/' is the bare self-closing form (<br/>), whose '/' tagfind's
+            # trailing consumer never eats (negative lookahead before '>').
+            if not body:
+                tag, attrs, closed = name.lower(), {}, False
+            elif body == "/":
+                tag, attrs, closed = name.lower(), {}, True
+            else:
+                # Start tag: replicate HTMLParser.parse_starttag exactly,
+                # using CPython's own tolerant regexes on the original string.
+                tm = _tagfind_tolerant.match(text, start + 1)
+                k = tm.end()
+                tag = tm.group(1).lower()
+                attrs = {}
+                while k < pos:
+                    am = _attrfind_tolerant.match(text, k)
+                    if not am:
+                        break
+                    attrname, rest, attrvalue = am.group(1, 2, 3)
+                    if not rest:
+                        attrvalue = ""
+                    elif (
+                        attrvalue[:1] == "'" == attrvalue[-1:]
+                        or attrvalue[:1] == '"' == attrvalue[-1:]
+                    ):
+                        attrvalue = attrvalue[1:-1]
+                    if attrvalue:
+                        attrvalue = _unescape(attrvalue)
+                    attrs[attrname.lower()] = attrvalue
+                    k = am.end()
+                end = text[k:pos].strip()
+                if end == "/>":
+                    closed = True
+                elif end == ">":
+                    closed = False
+                else:
+                    # junk characters in the start tag — stdlib emits the
+                    # raw tag text as data; out of subset, fall back
+                    return None
+            _open_element(stack, elements, tag, attrs, closed)
+    return root
 
 
-def parse_html(text: str) -> Element:
-    """Parse *text* into a document Element.  Lenient for malformed markup;
+def parse_html(text: str) -> Document:
+    """Parse *text* into a ``Document``.  Lenient for malformed markup;
     raises ``RecursionError`` only past ``MAX_DOM_DEPTH`` (callers contain
     it as an error row).  Tries the fast tokenizer first; any document
     outside its verified subset re-parses on the stdlib ``HTMLParser``."""

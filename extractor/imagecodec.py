@@ -1,5 +1,5 @@
-"""Real image codecs, stdlib only: PNG, GIF, TIFF, and BMP (encode +
-decode).
+"""Real image codecs, stdlib only: PNG (encode + decode), GIF, TIFF and
+BMP (decode; their fixture encoders live in ``tests/codec_encoders.py``).
 
 Closes the lossless image-decode boundary
 (``extractor/ops/multimodal.py``): PNG is zlib (stdlib) over per-row
@@ -250,27 +250,6 @@ def png_decode(payload: bytes) -> tuple[int, int, int, bytes]:
     return width, height, ch, pixels
 
 
-def bmp_encode(width: int, height: int, pixels: bytes) -> bytes:
-    """Write an uncompressed 24-bit BI_RGB BMP.  *pixels* is top-down RGB;
-    the file stores the spec's bottom-up BGR rows with 4-byte padding."""
-    import numpy as np
-
-    if len(pixels) != width * height * 3:
-        raise ValueError("pixel buffer size mismatch")
-    pad = (-width * 3) % 4
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, 3)
-    bgr = arr[::-1, :, ::-1]  # bottom-up rows, RGB→BGR
-    padded = np.zeros((height, width * 3 + pad), dtype=np.uint8)
-    padded[:, : width * 3] = bgr.reshape(height, width * 3)
-    data = padded.tobytes()
-    off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", off + len(data), 0, 0, off)
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    return header + dib + data
-
-
 @_contained
 def bmp_decode(payload: bytes) -> tuple[int, int, int, bytes]:
     """Decode an uncompressed 24-bit BI_RGB BMP to ``(width, height, 3,
@@ -390,76 +369,6 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
             if len(table) == (1 << width) and width < 12:
                 width += 1
     return bytes(out)  # missing EOI tolerated (seen in the wild)
-
-
-def _gif_lzw_encode_plain(indices: bytes, min_code_size: int) -> bytes:
-    """Deterministic 'uncompressed-style' GIF LZW encoder: every pixel is
-    emitted as its own literal code at fixed width min_code_size+1, with a
-    Clear code re-issued before the decoder's table would force a width
-    bump — the classic table-suppression technique (larger output, valid
-    stream, trivial to verify)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    # decoder adds one table entry per data code after the first; reset
-    # before its table reaches 2^width so width never grows
-    budget = (1 << width) - (clear + 2) - 1
-    emit(clear)
-    since_clear = 0
-    for px in indices:
-        if px >= clear:
-            raise ValueError("pixel index %d exceeds palette" % px)
-        if since_clear >= budget:
-            emit(clear)
-            since_clear = 0
-        emit(px)
-        since_clear += 1
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def gif_encode(
-    width: int, height: int, indices: bytes, palette: bytes
-) -> bytes:
-    """Write a real single-frame GIF89a: *indices* are width×height
-    palette indices (top-down, non-interlaced), *palette* is RGB triples
-    (length a multiple of 3, ≤256 entries).  Byte-deterministic."""
-    n_colors = len(palette) // 3
-    if len(palette) % 3 or not 0 < n_colors <= 256:
-        raise ValueError("palette must be 1..256 RGB triples")
-    if len(indices) != width * height:
-        raise ValueError("index buffer size mismatch")
-    depth = max(1, (max(n_colors - 1, 1)).bit_length())  # GCT size exponent
-    gct_entries = 1 << depth
-    gct = palette + b"\x00" * ((gct_entries - n_colors) * 3)
-    mcs = max(2, depth)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes((0x80 | ((depth - 1) & 7), 0, 0))  # GCT flag + size
-    out += gct
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + b"\x00"
-    out.append(mcs)
-    stream = _gif_lzw_encode_plain(indices, mcs)
-    for i in range(0, len(stream), 255):
-        block = stream[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"  # block terminator + trailer
-    return bytes(out)
 
 
 @_contained
@@ -714,129 +623,3 @@ def tiff_decode(payload: bytes) -> tuple[int, int, int, bytes]:
     if photo == 0:  # WhiteIsZero: invert to the BlackIsZero view
         pixels = bytes(255 - v for v in pixels)
     return width, height, spp, pixels
-
-
-def tiff_encode(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 1,
-    compression: str = "none",
-    byte_order: str = "II",
-    rows_per_strip: int | None = None,
-) -> bytes:
-    """Write a baseline TIFF (8-bit gray or RGB; ``compression`` in
-    ``none|packbits|lzw|g3mh|g4``; either byte order; optional
-    multi-strip layout).  Deterministic — the roundtrip fixture for the
-    decoder.  ``g3mh`` (compression 2, MH byte-aligned rows) and ``g4``
-    (compression 4, T.6 MMR) are bilevel: ``channels`` must be 1 and
-    pixels are thresholded at 128 (< 128 = black), written with
-    photometric 0 (WhiteIsZero) per fax convention."""
-    from extractor.ccittcodec import ccitt_encode
-    from extractor.pdf import lzw_encode, rle_encode
-
-    if len(pixels) != width * height * channels:
-        raise ValueError("pixel buffer size mismatch")
-    bilevel = compression in ("g3mh", "g4")
-    if bilevel and channels != 1:
-        raise ValueError("CCITT TIFF is single-channel")
-    fmt = "<" if byte_order == "II" else ">"
-    rps = rows_per_strip or height
-    rowlen = width * channels
-    if bilevel:
-        packed = bytearray()
-        prowlen = (width + 7) // 8
-        for y in range(height):
-            row = bytearray(prowlen)
-            for x in range(width):
-                if pixels[y * width + x] < 128:  # black
-                    row[x >> 3] |= 0x80 >> (x & 7)
-            packed += row
-    strips = []
-    for y0 in range(0, height, rps):
-        nrows = min(y0 + rps, height) - y0
-        chunk = pixels[y0 * rowlen : min(y0 + rps, height) * rowlen]
-        if compression == "none":
-            strips.append(chunk)
-        elif compression == "lzw":
-            strips.append(lzw_encode(chunk))
-        elif compression == "packbits":
-            enc = rle_encode(chunk)
-            strips.append(enc[:-1])  # PDF EOD byte is PackBits no-op; drop
-        elif compression == "g3mh":
-            strips.append(ccitt_encode(
-                bytes(packed[y0 * prowlen : (y0 + nrows) * prowlen]),
-                width, nrows, k=0, encoded_byte_align=True,
-                with_eofb=False, with_eols=False,
-            ))
-        elif compression == "g4":
-            strips.append(ccitt_encode(
-                bytes(packed[y0 * prowlen : (y0 + nrows) * prowlen]),
-                width, nrows, k=-1,
-            ))
-        else:
-            raise ValueError("unknown compression %r" % compression)
-    comp_tag = {"none": 1, "lzw": 5, "packbits": 32773,
-                "g3mh": 2, "g4": 4}[compression]
-    photo = 0 if bilevel else (2 if channels == 3 else 1)
-    n_strips = len(strips)
-
-    def entry(tag, typ, vals):
-        type_code = {3: "H", 4: "I"}[typ]
-        size = {3: 2, 4: 4}[typ] * len(vals)
-        packed = struct.pack(fmt + type_code * len(vals), *vals)
-        return tag, typ, len(vals), packed, size
-
-    entries = [
-        entry(256, 4, [width]),
-        entry(257, 4, [height]),
-        entry(258, 3, [1] if bilevel else [8] * channels),
-        entry(259, 3, [comp_tag]),
-        entry(262, 3, [photo]),
-        entry(273, 4, [0] * n_strips),  # offsets patched below
-        entry(277, 3, [channels]),
-        entry(278, 4, [rps]),
-        entry(279, 4, [len(s) for s in strips]),
-    ]
-    header = struct.pack(fmt + "2sHI", byte_order.encode(), 42, 8)
-    ifd_size = 2 + 12 * len(entries) + 4
-    # layout: header | IFD | overflow values | strips
-    overflow_at = 8 + ifd_size
-    overflow = bytearray()
-    fixed = []
-    for tag, typ, n, packed, size in entries:
-        if size <= 4:
-            fixed.append((tag, typ, n, packed.ljust(4, b"\x00")))
-        else:
-            fixed.append(
-                (tag, typ, n, struct.pack(fmt + "I", overflow_at + len(overflow)))
-            )
-            overflow += packed
-    strips_at = overflow_at + len(overflow)
-    strip_offsets = []
-    at = strips_at
-    for s in strips:
-        strip_offsets.append(at)
-        at += len(s)
-    # patch tag 273 (strip offsets) now that positions are known
-    for i, (tag, typ, n, val) in enumerate(fixed):
-        if tag == 273:
-            packed = struct.pack(fmt + "I" * n_strips, *strip_offsets)
-            if len(packed) <= 4:
-                fixed[i] = (tag, typ, n, packed.ljust(4, b"\x00"))
-            else:
-                # 273's overflow slot was reserved with the right size
-                off_entry = entries[5]
-                slot = struct.unpack(fmt + "I", val)[0]
-                overflow[
-                    slot - overflow_at : slot - overflow_at + len(packed)
-                ] = packed
-    out = bytearray(header)
-    out += struct.pack(fmt + "H", len(fixed))
-    for tag, typ, n, val in fixed:
-        out += struct.pack(fmt + "HHI", tag, typ, n) + val
-    out += struct.pack(fmt + "I", 0)  # next-IFD pointer
-    out += overflow
-    for s in strips:
-        out += s
-    return bytes(out)

@@ -1045,78 +1045,3 @@ def _decode_lossless(payload: bytes) -> tuple[int, int, int, bytes]:
         raise ValueError("lossless JPEG missing SOS")
     prec, height, width, nc, _ = frame
     return width, height, nc, out_planes
-
-
-def jpeg_lossless_encode(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 1,
-    predictor: int = 1,
-    precision: int = 8,
-) -> bytes:
-    """Write a lossless JPEG (SOF3, T.81 Annex H): Huffman-coded
-    prediction differences under the chosen predictor (1-7), point
-    transform 0, flat canonical SSSS table.  The roundtrip fixture for
-    :func:`_decode_lossless` — decode is bit-exact, not approximate.
-    8-bit input; ``precision=12/16`` scales the input left into the
-    wider domain (still exactly invertible)."""
-    if channels not in (1, 3, 4):
-        raise ValueError("channels must be 1, 3 or 4")
-    if not 1 <= predictor <= 7:
-        raise ValueError("predictor must be 1-7")
-    if precision not in (8, 12, 16):
-        raise ValueError("precision must be 8, 12 or 16")
-    if len(pixels) != width * height * channels:
-        raise ValueError("pixel buffer size mismatch")
-    shift = precision - 8
-    sm = [
-        [
-            [
-                pixels[(y * width + x) * channels + ci] << shift
-                for ci in range(channels)
-            ]
-            for x in range(width)
-        ]
-        for y in range(height)
-    ]
-    enc_tab = _huff_encode_table(_LL_BITS, _LL_VALS)
-    w = _BitWriter()
-    default = 1 << (precision - 1)
-    for y in range(height):
-        for x in range(width):
-            for ci in range(channels):
-                pred = _ll_predict(sm, x, y, ci, predictor, default)
-                diff = (sm[y][x][ci] - pred) & 0xFFFF
-                if diff > 32768:
-                    diff -= 65536
-                if diff == 32768:
-                    code, length = enc_tab[16]
-                    w.write(code, length)
-                    continue
-                size, bits = _magnitude(diff)
-                code, length = enc_tab[size]
-                w.write(code, length)
-                if size:
-                    w.write(bits, size)
-    w.pad_to_byte()
-
-    def seg(marker, body):
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xFFC4, b"\x00" + bytes(_LL_BITS) + bytes(_LL_VALS)
-    )
-    sof = struct.pack(">BHHB", precision, height, width, channels)
-    for ci in range(channels):
-        sof += bytes((ci + 1, 0x11, 0))
-    out += seg(0xFFC3, sof)
-    sos = bytes((channels,))
-    for ci in range(channels):
-        sos += bytes((ci + 1, 0x00))
-    sos += bytes((predictor, 0, 0))  # Ss = sel, Se = 0, AhAl = Pt 0
-    out += seg(0xFFDA, sos)
-    out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)

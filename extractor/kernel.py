@@ -36,6 +36,27 @@ Scale note: this module is imported on executors and invoked through
 ``convert_batch`` over whole Arrow record batches (``pd.Series`` in,
 ``pd.DataFrame`` out) — the per-row loop lives here, inside the batch,
 amortized by Arrow transfer; Spark never dispatches per-row Python.
+
+Fast paths (performance only; each is taken only behind its gate, and the
+output is byte-identical to the general path — pinned by the golden
+fixtures, ``tests/test_properties.py`` and the corpus digest in
+``tests/test_kernel_corpus_digest.py``):
+
+- plain prose — gate: no ``<`` and no ``&`` in the turn.  Skips the DOM:
+  md-escape + whitespace collapse + the one T10 rule that can fire.
+- HTML parse — gate: the document is inside the fast tokenizer's subset
+  (``dom._fast_parse``); anything else re-parses on the stdlib parser.
+- T7 candidates — no gate: split from the parser's document-order element
+  list (``Document.elements``) instead of a tree walk.
+- T4 rows — no gate: one walk per table lists every row's cells.
+- T5 cells — gate: every child of the cell is a text node.  No ``img``
+  search; the cell text is the stripped join of those nodes.
+- T8 hard breaks — gate: the rendered run contains a ``<br>`` marker
+  (``linearize._BR``); empty pending runs are not collapsed at all.
+- T10 cleanup — gate per step: the step's needle substring is present.
+- tree teardown — after linearization the document's parent links are
+  cleared (``Document.release``), so the tree is freed by reference
+  counting rather than by the cyclic garbage collector.
 """
 
 from __future__ import annotations
@@ -44,7 +65,7 @@ import posixpath
 import re
 from dataclasses import dataclass, field
 
-from .dom import Element, parse_html
+from .dom import Document, Element, parse_html
 from .linearize import escape_md_text, linearize
 
 # Mirrors MAX_FILE_SIZE (reference app/config.py:24): 50 MB per unit of work.
@@ -81,6 +102,12 @@ class ConvertOptions:
             raise ValueError(
                 f"Math engine must be one of: {list(MATH_ENGINES)}"
             )
+        if not isinstance(self.toc_depth, int) or self.toc_depth < 1:
+            # pandoc --toc-depth counts heading levels from 1; a depth
+            # below 1 would silently emit an empty TOC
+            raise ValueError(
+                f"toc_depth must be an integer >= 1 (got {self.toc_depth!r})"
+            )
 
 
 DEFAULT_OPTIONS = ConvertOptions()
@@ -115,7 +142,14 @@ def _image_markdown(alt: str, src: str, title: str) -> str:
 def _process_table_cell(cell: Element) -> tuple[str, list[dict]]:
     """T5 (reference :220-274): inline images → markdown, then stripped text.
     Mirrors the reference's per-cell containment (:271-274): on error, fall
-    back to bare get_text — which may itself raise, propagating to T4."""
+    back to bare get_text — which may itself raise, propagating to T4.
+
+    Text-only fast path: a cell whose children are all text nodes holds no
+    ``img`` and nothing to descend into, so ``find_all("img")`` is empty
+    and ``get_text(strip=True)`` is the stripped join of those children."""
+    children = cell.children
+    if all(type(c) is str for c in children):
+        return "".join(map(str.strip, children)), []
     try:
         return _process_table_cell_inner(cell)
     except Exception:
@@ -154,27 +188,54 @@ def _convert_table_to_markdown(table: Element) -> tuple[str, list[dict]]:
         return "", []
 
 
+def _table_rows(table: Element) -> list[list[Element]]:
+    """``[tr.find_all(["th", "td"]) for tr in table.find_all("tr")]`` in
+    one walk of the table: every ``tr`` in document order (nested tables'
+    rows included, as the reference's find_all has them) with the th/td
+    cells below it in document order (a nested table's cells count for
+    every enclosing row too).  Cell processing only replaces ``img``s,
+    which are void and hold no cells, so listing every row's cells up
+    front gives what the per-row searches would have found."""
+    rows: list[list[Element]] = []
+
+    def walk(node: Element, open_rows: list) -> None:
+        for child in node.children:
+            if type(child) is str:
+                continue
+            tag = child.tag
+            if tag == "tr":
+                cells: list[Element] = []
+                rows.append(cells)
+                walk(child, open_rows + [cells])
+                continue
+            if tag == "td" or tag == "th":
+                for cells in open_rows:
+                    cells.append(child)
+            if child.children:
+                walk(child, open_rows)
+
+    walk(table, [])
+    return rows
+
+
 def _convert_table_to_markdown_inner(table: Element) -> tuple[str, list[dict]]:
-    rows = table.find_all("tr")
+    rows = _table_rows(table)
     if not rows:
         return "", []
     table_images: list[dict] = []
-
-    header_cells: list[str] = []
-    for cell in rows[0].find_all(["th", "td"]):
-        content, imgs = _process_table_cell(cell)
-        header_cells.append(content)
-        table_images.extend(imgs)
-
-    data_rows: list[list[str]] = []
-    for row in rows[1:] if header_cells else rows:
-        row_cells = []
-        for cell in row.find_all(["th", "td"]):
+    row_texts: list[list[str]] = []
+    for cells in rows:
+        texts = []
+        for cell in cells:
             content, imgs = _process_table_cell(cell)
-            row_cells.append(content)
+            texts.append(content)
             table_images.extend(imgs)
-        if row_cells:
-            data_rows.append(row_cells)
+        row_texts.append(texts)
+
+    # the first row is the header even when it has no cells (then the
+    # reference re-reads it as a data row, where it adds nothing)
+    header_cells = row_texts[0]
+    data_rows = [texts for texts in row_texts[1:] if texts]
 
     if not header_cells and not data_rows:
         return "", []
@@ -241,19 +302,22 @@ def _math_class_filter(token) -> bool:
 
 
 def _extract_special_elements(
-    doc: Element,
+    doc: Document,
     correct_image_path: str = "images",
     math_engine: str = "latex",
 ) -> tuple[dict, dict, list]:
     """T7 (reference :344-422). Mutates *doc* in place.
 
-    Single-walk optimization: the reference performs four full-tree
+    No-walk candidate lists: the reference performs four full-tree
     ``find_all`` passes (tables; class-matched math/span; all math; images).
-    We snapshot all candidates in ONE walk, then filter each group by
-    attachment at the moment the reference would have searched — a math/img
-    detached by an earlier replacement (e.g. inside an extracted table) is
-    skipped *before* enumeration, so placeholder numbering is byte-identical
-    to the sequential-search original (pinned by the golden fixtures and the
+    The parser already listed every element in document order as it built
+    the tree (``Document.elements``, equal to the ``iter_elements`` walk of
+    the unmutated tree), so one pass over that list splits the groups, and
+    each group is filtered by attachment at the moment the reference would
+    have searched — a math/img detached by
+    an earlier replacement (e.g. inside an extracted table) is skipped
+    *before* enumeration, so placeholder numbering is byte-identical to the
+    sequential-search original (pinned by the golden fixtures and the
     equivalence property test)."""
     table_placeholders: dict[str, str] = {}
     math_placeholders: dict[str, str] = {}
@@ -263,19 +327,16 @@ def _extract_special_elements(
     math_class_matched: list[Element] = []
     math_tags: list[Element] = []
     imgs: list[Element] = []
-    for el in doc.iter_elements():
+    for el in doc.elements:  # every element, in document order
         tag = el.tag
         if tag == "table":
             tables.append(el)
         elif tag == "img":
             imgs.append(el)
-        if tag in ("math", "span"):
-            tokens = el.classes
-            if (
-                any(_math_class_filter(t) for t in tokens)
-                if tokens
-                else _math_class_filter(None)
-            ):
+        elif tag == "math" or tag == "span":
+            raw = el.attrs.get("class")
+            # _math_class_filter over the class tokens (never true for None)
+            if raw and any(_math_class_filter(t) for t in raw.split()):
                 math_class_matched.append(el)
             if tag == "math":
                 math_tags.append(el)
@@ -336,27 +397,32 @@ def _restore_special_elements(
     return markdown
 
 
+# (needle, pattern, replacement): each pattern can only match where its
+# needle occurs, so a step whose needle is absent from the current content
+# is skipped — an identity sub that would still scan the whole string.
 _CLEANUP_STEPS = (
-    (re.compile(r"^>\s*", re.MULTILINE), ""),
-    (re.compile(r"^\t+", re.MULTILINE), ""),
-    (re.compile(r"^    ", re.MULTILINE), ""),
-    (re.compile(r"\n{4,}"), "\n\n\n"),
-    (re.compile(r"\n{3}(?=\n)"), "\n\n"),
-    (re.compile(r"\n+(<table)"), r"\n\1"),
-    (re.compile(r"(</table>)\n+"), r"\1\n\n"),
-    (re.compile(r"\n+(<math)"), r"\n\1"),
-    (re.compile(r"(</math>)\n+"), r"\1\n"),
+    (">", re.compile(r"^>\s*", re.MULTILINE), ""),
+    ("\t", re.compile(r"^\t+", re.MULTILINE), ""),
+    ("    ", re.compile(r"^    ", re.MULTILINE), ""),
+    ("\n\n\n\n", re.compile(r"\n{4,}"), "\n\n\n"),
+    ("\n\n\n\n", re.compile(r"\n{3}(?=\n)"), "\n\n"),
+    ("<table", re.compile(r"\n+(<table)"), r"\n\1"),
+    ("</table>", re.compile(r"(</table>)\n+"), r"\1\n\n"),
+    ("<math", re.compile(r"\n+(<math)"), r"\n\1"),
+    ("</math>", re.compile(r"(</math>)\n+"), r"\1\n"),
 )
 
 
 def clean_markdown(content: str) -> str:
-    """T10 (reference :482-509) — the ordered cleanup regex chain, verbatim.
+    """T10 (reference :482-509) — the ordered cleanup regex chain, verbatim
+    (needle-gated: a step runs only when its needle is in the content).
 
     This sub-operator is SQL-expressible (chained regexp_replace + trim);
     see ``__spark_entry__.oracle_sql``'s ``t10_markdown_cleanup``.
     """
-    for pattern, repl in _CLEANUP_STEPS:
-        content = pattern.sub(repl, content)
+    for needle, pattern, repl in _CLEANUP_STEPS:
+        if needle in content:
+            content = pattern.sub(repl, content)
     return content.strip()
 
 
@@ -462,6 +528,7 @@ def convert_text(
             doc, math_engine=options.math_engine
         )
         markdown = linearize(doc)
+        doc.release()  # acyclic from here: freed on return, not by the GC
         markdown = _restore_special_elements(markdown, tables, maths, images)
         if toc:
             # pandoc places the TOC nav before the body; html2text renders

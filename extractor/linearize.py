@@ -79,6 +79,10 @@ _BLOCK_TAGS = frozenset(
 )
 _DROP_TAGS = frozenset({"script", "style", "head", "title", "meta", "link", "base"})
 _WS_RE = re.compile(r"[ \t\r\n\f\v]+")
+# <br> marker in rendered inline runs; the hard-break sub runs only on runs
+# that contain one
+_BR = "\x00BR\x00"
+_BR_RE = re.compile(r" ?\x00BR\x00 ?")
 
 # html2text escape_md_section (config.RE_MD_*_MATCHER, utils.escape_md_section
 # with snob=False — escape_snob is off in the reference's pinned config):
@@ -178,12 +182,13 @@ class _Writer:
         return "\n\n".join(self.blocks) + "\n\n" if self.blocks else ""
 
 
-def _render_inline(node: Element, parts: list[str], escape: bool = True) -> None:
-    """Render inline content of *node* into *parts* (pre-collapse).
+def _render_inline(nodes, parts: list[str], escape: bool = True) -> None:
+    """Render *nodes* (a child list, or one inline element in a tuple) as
+    inline content into *parts* (pre-collapse).
 
     *escape* mirrors html2text's ``self.code`` flag: text chunks are
     md-escaped per chunk except inside inline ``code``."""
-    for child in node.children:
+    for child in nodes:
         if isinstance(child, str):
             parts.append(escape_md_text(child) if escape else child)
             continue
@@ -191,7 +196,7 @@ def _render_inline(node: Element, parts: list[str], escape: bool = True) -> None
         if tag in _DROP_TAGS:
             continue
         if tag == "br":
-            parts.append("\x00BR\x00")
+            parts.append(_BR)
         elif tag in ("strong", "b"):
             inner = _inline_text(child, escape)
             parts.append(f"**{inner}**" if inner else "")
@@ -214,22 +219,25 @@ def _render_inline(node: Element, parts: list[str], escape: bool = True) -> None
             continue  # ignore_images=True
         else:
             # transparent inline (span, u, ...)
-            _render_inline(child, parts, escape)
+            _render_inline(child.children, parts, escape)
 
 
 def _inline_text(node: Element, escape: bool = True) -> str:
     parts: list[str] = []
-    _render_inline(node, parts, escape)
+    _render_inline(node.children, parts, escape)
     return _collapse("".join(parts)).strip()
 
 
 def _finish_paragraph(parts: list[str], writer: _Writer, prefix: str = "") -> None:
+    if not parts:  # the join/collapse below would only yield ""
+        return
     raw = _collapse("".join(parts)).strip()
     parts.clear()
     if not raw:
         return
     # Hard breaks: html2text writes two trailing spaces + newline.
-    raw = re.sub(r" ?\x00BR\x00 ?", "  \n", raw)
+    if _BR in raw:
+        raw = _BR_RE.sub("  \n", raw)
     raw = raw.strip("\n")
     if prefix:
         raw = "\n".join(prefix + line for line in raw.split("\n"))
@@ -249,11 +257,11 @@ def _render_block(node: Element, writer: _Writer, quote_depth: int = 0) -> None:
             continue
         if tag not in _BLOCK_TAGS:
             if tag == "br":
-                pending.append("\x00BR\x00")
+                pending.append(_BR)
             else:
                 # render the element itself (keeps **strong**/_em_/links for
                 # inline elements sitting directly under a block container)
-                _render_inline_single(child, pending)
+                _render_inline((child,), pending)
             continue
 
         # A block child: flush any pending inline run first.
@@ -287,7 +295,7 @@ def _render_block(node: Element, writer: _Writer, quote_depth: int = 0) -> None:
                 _render_block(child, writer, quote_depth)
             else:
                 inner_parts: list[str] = []
-                _render_inline(child, inner_parts)
+                _render_inline(child.children, inner_parts)
                 _finish_paragraph(inner_parts, writer, prefix)
 
     _finish_paragraph(pending, writer, prefix)
@@ -312,20 +320,15 @@ def _render_list(node: Element, ordered: bool, depth: int) -> list[str]:
             elif isinstance(sub, str):
                 item_parts.append(escape_md_text(sub))
             else:
-                _render_inline_single(sub, item_parts)
+                _render_inline((sub,), item_parts)
         text = _collapse("".join(item_parts)).strip()
-        text = re.sub(r" ?\x00BR\x00 ?", "  \n" + indent + " " * len(marker), text)
+        if _BR in text:
+            text = _BR_RE.sub("  \n" + indent + " " * len(marker), text)
         if text:
             lines.append(indent + marker + text)
         for sub, sub_ordered in nested:
             lines.extend(_render_list(sub, sub_ordered, depth + 1))
     return lines
-
-
-def _render_inline_single(el: Element, parts: list[str]) -> None:
-    holder = Element("span")
-    holder.children = [el]
-    _render_inline(holder, parts)
 
 
 def linearize(document: Element) -> str:

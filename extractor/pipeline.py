@@ -190,7 +190,23 @@ def extract_transcripts(
     unchanged (appended to the output schema with their input types).  This
     is the zero-join way to keep per-turn metadata (``source``, labels, …)
     attached to extraction output — never re-join the corpus to itself.
+
+    Nonsense tunables raise ``ValueError`` before any Spark call (a zero
+    bucket count would otherwise fail inside a task, a negative threshold
+    salt every conversation, a zero partition count fall back silently).
     """
+    if partition_mode not in ("map_only", "hash_conv"):
+        raise ValueError(f"unknown partition_mode: {partition_mode}")
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1 (got {num_partitions})")
+    if salt_buckets < 1:
+        raise ValueError(f"salt_buckets must be >= 1 (got {salt_buckets})")
+    if salt_threshold < 0:
+        raise ValueError(f"salt_threshold must be >= 0 (got {salt_threshold})")
+    if hot_sample_fraction is not None and not 0 < hot_sample_fraction <= 1:
+        raise ValueError(
+            f"hot_sample_fraction must be in (0, 1] (got {hot_sample_fraction})"
+        )
     extra_fields = [df.schema[c] for c in extra_passthrough]
     cols = (
         [c for c in _PASSTHROUGH if c in df.columns]
@@ -213,8 +229,6 @@ def extract_transcripts(
             slim, salt_threshold, salt_buckets, hot_sample_fraction
         )
         slim = slim.repartition(n, "part_key").drop("salt", "part_key", "conv_turns")
-    elif partition_mode != "map_only":
-        raise ValueError(f"unknown partition_mode: {partition_mode}")
 
     pass_cols = _PASSTHROUGH + tuple(extra_passthrough)
     schema = T.StructType(

@@ -192,7 +192,8 @@ def test_pdf_ccitt_image_extraction():
 
 @pytest.mark.parametrize("comp", ["g3mh", "g4"])
 def test_tiff_ccitt_roundtrip(comp):
-    from extractor.imagecodec import tiff_decode, tiff_encode
+    from codec_encoders import tiff_encode
+    from extractor.imagecodec import tiff_decode
 
     rng = random.Random(9)
     for w, h in ((1, 1), (7, 3), (37, 9), (100, 21)):

@@ -122,7 +122,8 @@ def test_png_roundtrip_any_shape_and_filter(w, h, ct, ft, rnd):
     st.randoms(use_true_random=False),
 )
 def test_gif_roundtrip_any_palette_size(w, h, nc, rnd):
-    from extractor.imagecodec import gif_decode, gif_encode
+    from codec_encoders import gif_encode
+    from extractor.imagecodec import gif_decode
 
     pal = bytes(rnd.randrange(256) for _ in range(nc * 3))
     idx = bytes(rnd.randrange(nc) for _ in range(w * h))
@@ -141,7 +142,8 @@ def test_gif_roundtrip_any_palette_size(w, h, nc, rnd):
     st.randoms(use_true_random=False),
 )
 def test_tiff_roundtrip_any_shape(w, h, ch, comp, bo, rps, rnd):
-    from extractor.imagecodec import tiff_decode, tiff_encode
+    from codec_encoders import tiff_encode
+    from extractor.imagecodec import tiff_decode
 
     px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
     assert tiff_decode(tiff_encode(w, h, px, ch, comp, bo, rps)) == (
@@ -156,7 +158,8 @@ def test_tiff_roundtrip_any_shape(w, h, ch, comp, bo, rps, rnd):
     st.randoms(use_true_random=False),
 )
 def test_bmp_roundtrip_any_padding(w, h, rnd):
-    from extractor.imagecodec import bmp_decode, bmp_encode
+    from codec_encoders import bmp_encode
+    from extractor.imagecodec import bmp_decode
 
     px = bytes(rnd.randrange(256) for _ in range(w * h * 3))
     assert bmp_decode(bmp_encode(w, h, px)) == (w, h, 3, px)
@@ -173,7 +176,8 @@ def test_bmp_roundtrip_any_padding(w, h, rnd):
     st.sampled_from([8000, 16000, 44100]),
 )
 def test_wav_roundtrip_quantization_bounded(samples, nch, rate):
-    from extractor.audiocodec import wav_decode, wav_encode
+    from codec_encoders import wav_encode
+    from extractor.audiocodec import wav_decode
 
     if len(samples) % nch:
         samples = samples[: len(samples) - len(samples) % nch]

@@ -299,7 +299,8 @@ def test_lossless_jpeg_bit_exact():
     8/12/16-bit domains — decode must be BIT-EXACT, not approximate."""
     import random
 
-    from extractor.jpegcodec import jpeg_decode, jpeg_lossless_encode
+    from codec_encoders import jpeg_lossless_encode
+    from extractor.jpegcodec import jpeg_decode
 
     rng = random.Random(8)
     for ch in (1, 3, 4):
@@ -323,7 +324,8 @@ def test_lossless_jpeg_bit_exact():
 def test_lossless_jpeg_guards():
     import pytest
 
-    from extractor.jpegcodec import jpeg_decode, jpeg_lossless_encode
+    from codec_encoders import jpeg_lossless_encode
+    from extractor.jpegcodec import jpeg_decode
 
     with pytest.raises(ValueError, match="predictor"):
         jpeg_lossless_encode(4, 4, bytes(16), 1, predictor=0)

@@ -137,3 +137,10 @@ def test_default_options_unchanged():
     assert r_default.extracted_text == r_explicit.extracted_text == GOLDEN[
         "math_data_latex_attr"
     ]["extracted_text"]
+
+
+@pytest.mark.parametrize("toc_depth", [0, -1, 2.5, "3", None])
+def test_nonsense_toc_depth_rejected(toc_depth):
+    # a depth below 1 used to be accepted and silently emit no TOC
+    with pytest.raises(ValueError, match="toc_depth"):
+        ConvertOptions(include_toc=True, toc_depth=toc_depth)

@@ -67,7 +67,8 @@ def test_real_png_bmp_payloads_decode_in_kernel(spark):
     failure."""
     import hashlib
 
-    from extractor.imagecodec import bmp_encode, png_encode
+    from codec_encoders import bmp_encode
+    from extractor.imagecodec import png_encode
     from extractor.jpegcodec import jpeg_encode
 
     def px(n, seed):
@@ -110,9 +111,9 @@ def test_imagecodec_roundtrips_and_foreign_fixture():
 
     import pytest
 
+    from codec_encoders import bmp_encode
     from extractor.imagecodec import (
         bmp_decode,
-        bmp_encode,
         png_decode,
         png_encode,
         sniff_image,
@@ -202,7 +203,8 @@ def test_gif_codec_roundtrips_and_foreign_fixture():
 
     import pytest
 
-    from extractor.imagecodec import gif_decode, gif_encode, sniff_image
+    from codec_encoders import gif_encode
+    from extractor.imagecodec import gif_decode, sniff_image
 
     rnd = random.Random(3)
     for w, h, nc in ((1, 1, 2), (3, 2, 4), (16, 16, 256), (40, 23, 17)):
@@ -242,7 +244,7 @@ def test_gif_codec_roundtrips_and_foreign_fixture():
 
 
 def test_gif_payload_decodes_in_kernel(spark):
-    from extractor.imagecodec import gif_encode
+    from codec_encoders import gif_encode
 
     pal = bytes((255, 0, 0, 0, 255, 0, 0, 0, 255))
     idx = bytes((0, 1, 2, 1, 0, 2) * 4)
@@ -347,7 +349,8 @@ def test_wav_codec_roundtrip_and_containment():
 
     import pytest
 
-    from extractor.audiocodec import sniff_audio, wav_decode, wav_encode
+    from codec_encoders import wav_encode
+    from extractor.audiocodec import sniff_audio, wav_decode
 
     # 16-bit stereo sine/cosine, 440/880 Hz at 8 kHz
     n = 800
@@ -383,7 +386,7 @@ def test_extract_audio_features_kernel(spark):
     compressed formats become contained error rows."""
     import math
 
-    from extractor.audiocodec import wav_encode
+    from codec_encoders import wav_encode
 
     sine = [
         math.sin(2 * math.pi * 220 * i / 8000) * 0.8 for i in range(640)
@@ -417,7 +420,8 @@ def test_tiff_codec_roundtrips_and_shapes():
 
     import pytest
 
-    from extractor.imagecodec import sniff_image, tiff_decode, tiff_encode
+    from codec_encoders import tiff_encode
+    from extractor.imagecodec import sniff_image, tiff_decode
 
     rnd = random.Random(21)
     for ch in (1, 3):
@@ -448,7 +452,8 @@ def test_tiff_codec_roundtrips_and_shapes():
 def test_tiff_palette_and_whiteiszero():
     import struct
 
-    from extractor.imagecodec import tiff_decode, tiff_encode
+    from codec_encoders import tiff_encode
+    from extractor.imagecodec import tiff_decode
 
     # WhiteIsZero: flip photometric tag (262) on a grayscale image
     px = bytes((0, 128, 255, 7))

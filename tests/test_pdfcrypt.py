@@ -126,9 +126,9 @@ def test_key_derivation_shapes():
 def test_aes_fips197_known_answer():
     """FIPS-197 Appendix C.1 — the canonical AES-128 vector, decode
     direction included; tables are computed, this pins them."""
+    from codec_encoders import _encrypt_block_public
     from extractor.aescodec import (
         _decrypt_block,
-        _encrypt_block_public,
         _expand_key,
         aes_cbc_decrypt,
         aes_cbc_encrypt,
@@ -199,9 +199,9 @@ def test_mismatched_v5_cfm_is_honest():
 
 def test_aes256_vectors():
     """FIPS-197 C.3 block vector + NIST SP 800-38A F.2.5 CBC vector."""
+    from codec_encoders import _encrypt_block_public
     from extractor.aescodec import (
         _decrypt_block,
-        _encrypt_block_public,
         _expand_key,
         aes_cbc_decrypt,
         aes_cbc_encrypt,

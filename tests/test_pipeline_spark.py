@@ -397,3 +397,32 @@ def test_km_minhash_matches_python_reference(spark):
 
     for doc_id, text in texts:
         assert got[doc_id] == ref(text), (doc_id, got[doc_id], ref(text))
+
+
+class _NoSpark:
+    """A DataFrame stand-in that fails on any use: a tunable check that
+    passes it proves the rejection came before any Spark call."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"Spark touched before validation: .{name}")
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"partition_mode": "hash_conv", "salt_buckets": 0},
+        {"partition_mode": "hash_conv", "salt_buckets": -2},
+        {"partition_mode": "hash_conv", "salt_threshold": -1},
+        {"partition_mode": "hash_conv", "num_partitions": 0},
+        {"num_partitions": 0},
+        {"num_partitions": -4},
+        {"partition_mode": "hash_conv", "hot_sample_fraction": 0},
+        {"partition_mode": "hash_conv", "hot_sample_fraction": 1.5},
+        {"partition_mode": "range"},
+    ],
+)
+def test_nonsense_tunables_rejected_before_spark(kwargs):
+    # before: salt_buckets=0 died in a task (REMAINDER_BY_ZERO), -2 and a
+    # negative threshold ran silently, num_partitions=0 became the default
+    with pytest.raises(ValueError):
+        extract_transcripts(_NoSpark(), **kwargs)

@@ -144,7 +144,8 @@ def test_extract_any_map_only_plan_and_rows(spark):
 def test_route_image_payloads():
     """Images decode for real (PNG/BMP/baseline JPEG) and count as
     media; corrupt bytes become contained error rows."""
-    from extractor.imagecodec import bmp_encode, png_encode
+    from codec_encoders import bmp_encode
+    from extractor.imagecodec import png_encode
     from extractor.jpegcodec import jpeg_encode
 
     out = route_payload(png_encode(4, 3, bytes(36), 2))
